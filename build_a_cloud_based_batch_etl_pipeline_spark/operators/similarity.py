@@ -1220,10 +1220,10 @@ _PQ_SUB = _DIM // _PQ_M
 _PQ_K = 256
 _PQ_KMEANS_ITERS = 10
 _PQ_TRAIN_ROWS = 4096
-# ADC scores the index in columns of this many vectors so scratch memory
-# is (arrow_batch x _ADC_CHUNK) doubles (~2.5 GB worst case at the 10k
-# default batch), bounded independently of index size.
-_ADC_CHUNK = 32_768
+# Queries LUT-ed per block by _adc_topk: bounds the transient B x M x K
+# table to ~16 MiB (1024 x 8 x 256 doubles) no matter how large the
+# Arrow batch or broadcast query batch is.
+_SHARD_Q_BLOCK = 1024
 
 
 def _pq_assign(sub, cent):
@@ -1415,16 +1415,109 @@ def embed_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: queries stream through mapInPandas in Arrow batches;
     each executor holds the broadcast codes matrix (8 bytes/vector — a
     billion-vector index is ~8 GB, exactly why PQ exists) and scores
-    with two numpy gathers per subspace. The index is scored in
-    fixed-size column chunks with a running per-chunk top-k merge, so
-    peak scratch memory is (batch x _ADC_CHUNK) floats regardless of
-    index size — the dense (batch x index) matrix never materializes.
-    The fixture-scale flat ADC scan becomes IVF-bucketed ADC at corpus
-    scale (probe nprobe buckets, same lookup-table math per bucket)."""
+    through the shared _adc_topk kernel with the whole index as ONE
+    inverted list: per query, 8 gathers of index length plus one
+    lexsort, so scratch memory is O(index) per query — the dense
+    (batch x index) matrix never materializes. The fixture-scale flat
+    ADC scan becomes IVF-bucketed ADC at corpus scale (probe nprobe
+    lists, the same kernel over fewer candidates)."""
     books, ids, codes, _ = _pq_fit(spark, sf_dir)
     emb = t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     # queries ARE the index corpus here, so |Q| = len(ids), already known
     return _adc_topk_stream(spark, emb, books, ids, codes, n_queries=len(ids))
+
+
+# Output schemas of the ADC scorers: the rounded per-query top-k every
+# ANN query emits, and the raw shard winners the sharded reduce merges.
+_ADC_SCHEMA = "qid long, nid long, adc_score double"
+_ADC_RAW_SCHEMA = "qid long, nid long, score_raw double"
+
+
+def _list_members(list_of, eligible=None) -> dict:
+    """list_id -> ascending index positions of its (eligible) members:
+    the inverted lists _adc_topk concatenates per query, grouped ONCE
+    per task — a per-query np.isin over the whole index would rescan
+    it for every query row."""
+    import numpy as np
+
+    pos = (
+        np.arange(len(list_of)) if eligible is None
+        else np.flatnonzero(eligible)
+    )
+    lists = list_of[pos]
+    return {int(li): pos[lists == li] for li in np.unique(lists)}
+
+
+def _ivf_probes(q, coarse, nprobe: int | None):
+    """Each (normalized) query's probed inverted lists: its `nprobe`
+    (default _IVFPQ_NPROBE, at most _IVFPQ_NLIST) nearest coarse
+    centroids by inner product, one batched argsort."""
+    import numpy as np
+
+    n_probe = min(
+        _IVFPQ_NLIST, _IVFPQ_NPROBE if nprobe is None else int(nprobe)
+    )
+    return np.argsort(-(q @ coarse.T), axis=1)[:, :n_probe]
+
+
+def _adc_topk(
+    q,
+    qids,
+    probes,
+    members: dict,
+    books,
+    index_ids,
+    index_codes,
+    k: int,
+    qlabs=None,
+    index_labels=None,
+):
+    """THE ADC scoring and tie-break kernel behind every PQ scorer
+    (flat, IVF, masked, label-masked and sharded): returns parallel
+    (qid, nid, raw score) arrays, each query's top-k neighbors.
+
+    q: L2-normalized (B, DIM) queries with ids `qids`; probes[b]: the
+    list ids query b probes; members: list_id -> index positions (see
+    _list_members; an absent list contributes nothing, which is how a
+    shard that holds only some lists scores). A query never matches its
+    own id, and with labels given only candidates sharing the query's
+    label are eligible.
+
+    The LUT[b, m, c] = <q_b[m], codeword c of subspace m> is built once
+    per _SHARD_Q_BLOCK queries; a candidate's score is the 8 subspace
+    lookups added in order starting from 0.0, so every caller computes
+    bit-identical scores for the same (query, candidate). Selection is
+    the full (-score, nid) total order, then k — score ties resolve to
+    the smallest nid however candidates are ordered or sharded, so a
+    shard-local top-k is a subset-safe input to the global reduce."""
+    import numpy as np
+
+    out_q = [np.empty(0, np.int64)]
+    out_n = [np.empty(0, np.int64)]
+    out_s = [np.empty(0, np.float64)]
+    for lo in range(0, len(q), _SHARD_Q_BLOCK):
+        hi = min(lo + _SHARD_Q_BLOCK, len(q))
+        lut = np.einsum(
+            "bms,mks->bmk", q[lo:hi].reshape(hi - lo, _PQ_M, _PQ_SUB), books
+        )
+        for bi in range(lo, hi):
+            hit = [members[p] for p in probes[bi].tolist() if p in members]
+            if not hit:
+                continue
+            cand = np.concatenate(hit)
+            keep = index_ids[cand] != qids[bi]
+            if qlabs is not None:
+                keep &= index_labels[cand] == qlabs[bi]
+            cand = cand[keep]
+            s = np.zeros(len(cand))
+            for m in range(_PQ_M):
+                s += lut[bi - lo, m, index_codes[cand, m]]
+            nid = index_ids[cand]
+            top = np.lexsort((nid, -s))[:k]
+            out_q.append(np.full(len(top), qids[bi], dtype=np.int64))
+            out_n.append(nid[top])
+            out_s.append(s[top])
+    return np.concatenate(out_q), np.concatenate(out_n), np.concatenate(out_s)
 
 
 def _adc_topk_stream(
@@ -1433,87 +1526,84 @@ def _adc_topk_stream(
     books,
     ids,
     codes,
+    coarse=None,
+    assign=None,
     k: int = 5,
+    index_mask=None,
+    nprobe: int | None = None,
     n_queries: int | None = None,
+    index_labels=None,
 ) -> DataFrame:
-    """Chunked flat-ADC top-k scoring of a query stream against a
-    PQ-coded index — the scorer shared by embed_ann_pq (session-trained
-    artifacts) and embed_ann_pq_indexed (artifacts loaded from the
-    persisted index tables), so the two paths cannot drift. See
-    embed_ann_pq's docstring for the chunking/tie contract."""
-    import numpy as np
-    from pyspark.sql import types as T
+    """ADC top-k of a query stream against a broadcast PQ-coded index —
+    the driver every broadcast-index ANN query shares, so the paths
+    cannot drift: queries (vec_id, embedding[, label]) stream through
+    mapInPandas and each Arrow batch goes through _adc_topk.
 
-    # parallelize a one-split query fixture across cores, capped by the
-    # caller-known query count so a tiny batch is not shredded into
-    # core-count crumbs (real-scale inputs are already split; per-query
-    # scoring is partition-invariant)
-    emb = spread_small_input(emb, "vec_id", n_rows=n_queries)
-    b_all = spark.sparkContext.broadcast((books, ids, codes))
-    out_schema = T.StructType(
-        [
-            T.StructField("qid", T.LongType()),
-            T.StructField("nid", T.LongType()),
-            T.StructField("adc_score", T.DoubleType()),
-        ]
+    coarse / assign: IVF centroids and each index vector's list id;
+    queries are routed to their `nprobe` nearest lists (see _ivf_probes
+    — masked searches probe MORE lists to keep the eligible pool at the
+    unmasked size, the standard selectivity compensation: recall@3
+    0.42 at nprobe=3 -> 0.61 at nprobe=10 for a ~30% predicate). With
+    coarse=None the scan is flat: one list holds the whole index and
+    every query probes it.
+
+    index_mask: optional bool array aligned to `ids`; only masked-True
+    vectors are eligible neighbors (a metadata predicate, or the index
+    side of a two-corpus join) — folded into the once-per-task list
+    grouping, so the per-query path is unchanged.
+
+    index_labels: optional int array aligned to `ids`; switches on the
+    PER-QUERY label-equality filter (the query stream must then carry a
+    `label` column).
+
+    n_queries: caller-known |Q|; when given, a one-split query fixture
+    is spread across cores, capped so a tiny batch is not shredded into
+    core-count crumbs (real-scale inputs are already split; per-query
+    scoring is partition-invariant). None leaves the stream's
+    partitioning as it is.
+
+    Scores are rounded to 4 dp once, as rows are emitted."""
+    import numpy as np
+
+    if n_queries is not None:
+        emb = spread_small_input(emb, "vec_id", n_rows=n_queries)
+    b_all = spark.sparkContext.broadcast(
+        (books, ids, codes, coarse, assign, index_mask, index_labels)
     )
 
     def score(batches):
         import pandas as pd
 
-        bk, index_ids, index_codes = b_all.value
+        bk, index_ids, index_codes, cents, list_of, mask, labs = b_all.value
+        if cents is None:  # flat scan: one list holds the whole index
+            list_of = np.zeros(len(index_ids), dtype=np.int64)
+        members = _list_members(list_of, mask)
         for pdf in batches:
             if not len(pdf):
                 continue
             q = np.array(list(pdf["embedding"]), dtype=np.float64)
             q /= np.linalg.norm(q, axis=1, keepdims=True)
-            qids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            # LUT[b, m, k] = <q_b[m], codeword k of subspace m>
-            lut = np.einsum(
-                "bms,mks->bmk",
-                q.reshape(len(q), _PQ_M, _PQ_SUB),
-                bk,
+            probes = (
+                np.zeros((len(q), 1), dtype=np.int64) if cents is None
+                else _ivf_probes(q, cents, nprobe)
             )
-            # scores[b, n] = sum_m LUT[b, m, codes[n, m]], computed per
-            # index chunk: under the (-score, nid) total order, a global
-            # top-k element is inside its own chunk's top-(k+1) (k+1 so
-            # the self row can be dropped later), so merging per-chunk
-            # winners loses nothing. Selection is a STABLE argsort of
-            # -score — positions ascend with nid (ids are sorted at fit
-            # time), so score ties resolve to the smallest nid in every
-            # chunk, and the output is identical for every _ADC_CHUNK
-            # setting (argpartition would keep an arbitrary tied subset
-            # at the boundary).
-            cand_pos, cand_sc = [], []
-            for lo in range(0, len(index_ids), _ADC_CHUNK):
-                hi = min(lo + _ADC_CHUNK, len(index_ids))
-                chunk = np.zeros((len(q), hi - lo))
-                for m in range(_PQ_M):
-                    chunk += lut[:, m, index_codes[lo:hi, m]]
-                kk = min(k + 1, hi - lo)
-                top = np.argsort(-chunk, axis=1, kind="stable")[:, :kk]
-                cand_pos.append(top + lo)
-                cand_sc.append(np.take_along_axis(chunk, top, axis=1))
-            pos = np.concatenate(cand_pos, axis=1)
-            sc = np.concatenate(cand_sc, axis=1)
-            out_q, out_n, out_s = [], [], []
-            for bi in range(len(q)):
-                s = sc[bi].copy()
-                nids = index_ids[pos[bi]]
-                s[nids == qids[bi]] = -np.inf
-                # candidates are few (nchunks * (k+1)); full (-score,
-                # nid) order, then take k — same tie contract as above
-                order = np.lexsort((nids, -s))[: min(k, s.size)]
-                order = order[s[order] > -np.inf]
-                out_q.extend([qids[bi]] * len(order))
-                out_n.extend(nids[order])
-                out_s.extend(np.round(s[order], 4))
+            qid, nid, s = _adc_topk(
+                q,
+                pdf["vec_id"].to_numpy(dtype=np.int64),
+                probes,
+                members,
+                bk,
+                index_ids,
+                index_codes,
+                k,
+                None if labs is None else pdf["label"].to_numpy(np.int64),
+                labs,
+            )
             yield pd.DataFrame(
-                {"qid": out_q, "nid": np.array(out_n, dtype=np.int64),
-                 "adc_score": out_s}
+                {"qid": qid, "nid": nid, "adc_score": np.round(s, 4)}
             )
 
-    return emb.mapInPandas(score, out_schema)
+    return emb.mapInPandas(score, _ADC_SCHEMA)
 
 
 _IVFPQ_NLIST = 16
@@ -1569,121 +1659,9 @@ def embed_ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver-side step; scoring streams queries through mapInPandas."""
     books, ids, codes, coarse, assign = _ivfpq_fit(spark, sf_dir)
     emb = t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    return _ivf_adc_topk_stream(
+    return _adc_topk_stream(
         spark, emb, books, ids, codes, coarse, assign, n_queries=len(ids)
     )
-
-
-def _ivf_adc_topk_stream(
-    spark: SparkSession,
-    emb: DataFrame,
-    books,
-    ids,
-    codes,
-    coarse,
-    assign,
-    k: int = 5,
-    index_mask=None,
-    nprobe: int | None = None,
-    n_queries: int | None = None,
-) -> DataFrame:
-    """IVF-routed ADC top-k scoring — the scorer shared by
-    embed_ann_ivf_pq (session-trained artifacts),
-    embed_ann_ivf_pq_indexed (artifacts loaded from the persisted index
-    tables, including the stored per-vector list assignment),
-    embed_ann_join_ivf_pq (two-corpus join: index_mask restricts the
-    candidate side to the index corpus), and embed_ann_filtered_ivf_pq
-    (metadata predicate as the mask), so the paths cannot drift.
-
-    index_mask: optional bool array aligned to `ids`; when given, only
-    masked-True index vectors are eligible neighbors — applied once per
-    task while grouping inverted-list members, so the per-query path is
-    unchanged.
-
-    nprobe: probe-count override (default _IVFPQ_NPROBE). Masked
-    searches probe MORE lists to keep the eligible-candidate pool at
-    the unmasked size — the standard selectivity compensation (callers
-    scale by 1/selectivity; measured on the filtered query: recall@3
-    0.42 at nprobe=3 -> 0.61 at nprobe=10 for a ~30% predicate)."""
-    import numpy as np
-    from pyspark.sql import types as T
-
-    # a small fixture arrives as one parquet file = one input split,
-    # which would serialize the whole scoring pass onto a single Python
-    # worker; an already-split query stream at real scale is untouched
-    # (same gate as the text operators — the scorer is CPU-bound and
-    # per-query independent, so partitioning never changes results).
-    # The caller-known query count caps the spread (VERDICT r16 item 1).
-    emb = spread_small_input(emb, "vec_id", n_rows=n_queries)
-    if index_mask is None:
-        index_mask = np.ones(len(ids), dtype=bool)
-    n_probe = min(
-        _IVFPQ_NLIST, _IVFPQ_NPROBE if nprobe is None else int(nprobe)
-    )
-    b_all = spark.sparkContext.broadcast(
-        (books, ids, codes, coarse, assign, index_mask)
-    )
-    out_schema = T.StructType(
-        [
-            T.StructField("qid", T.LongType()),
-            T.StructField("nid", T.LongType()),
-            T.StructField("adc_score", T.DoubleType()),
-        ]
-    )
-
-    def score(batches):
-        import pandas as pd
-
-        bk, index_ids, index_codes, cents, bucket_of, eligible = b_all.value
-        # bucket -> index positions, grouped ONCE per task: the naive
-        # per-query np.isin(bucket_of, probe) rescans the whole index
-        # per query row (O(B*N) per batch — the 1.69x-vs-anchor drag
-        # VERDICT r9 flagged); nlist passes here make candidate lookup
-        # a concatenate of precomputed position arrays instead. The
-        # join's corpus restriction folds into the same pass.
-        members = [
-            np.flatnonzero((bucket_of == li) & eligible)
-            for li in range(len(cents))
-        ]
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            q = np.array(list(pdf["embedding"]), dtype=np.float64)
-            q /= np.linalg.norm(q, axis=1, keepdims=True)
-            qids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            qsim = q @ cents.T  # (B, nlist) coarse routing scores
-            # one batched routing argsort (probe sets for every query)
-            probes = np.argsort(-qsim, axis=1)[:, :n_probe]
-            lut = np.einsum(
-                "bms,mks->bmk", q.reshape(len(q), _PQ_M, _PQ_SUB), bk
-            )
-            out_q, out_n, out_s = [], [], []
-            for bi in range(len(q)):
-                cand = np.concatenate([members[p] for p in probes[bi]])
-                cand = cand[index_ids[cand] != qids[bi]]
-                if not len(cand):
-                    continue
-                s = np.zeros(len(cand))
-                for m in range(_PQ_M):
-                    s += lut[bi, m, index_codes[cand, m]]
-                kk = min(k, len(cand))
-                # full (-score, nid) total order then take k — ties at
-                # the k boundary resolve to the smallest nid no matter
-                # how the candidate list is ordered (argpartition kept
-                # an arbitrary tied subset, the flat scorer's pitfall)
-                top = np.lexsort((index_ids[cand], -s))[:kk]
-                out_q.extend([qids[bi]] * kk)
-                out_n.extend(index_ids[cand[top]])
-                out_s.extend(np.round(s[top], 4))
-            yield pd.DataFrame(
-                {
-                    "qid": np.array(out_q, dtype=np.int64),
-                    "nid": np.array(out_n, dtype=np.int64),
-                    "adc_score": np.array(out_s, dtype=np.float64),
-                }
-            )
-
-    return emb.mapInPandas(score, out_schema)
 
 
 @query(
@@ -2182,7 +2160,7 @@ def embed_ann_pq_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     pq_codes tables (memoized per content fingerprint — warm calls,
     including bench's repeat runs, skip training entirely and pay only
     load + score), then queries stream against the LOADED artifacts
-    through the shared chunked-ADC scorer. Training cost lives in the
+    through the shared ADC scorer. Training cost lives in the
     build job, not the query path — the split a production ANN service
     actually runs."""
     root = _pq_index_artifact(spark, sf_dir)
@@ -2206,7 +2184,7 @@ def embed_ann_ivf_pq_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = _pq_index_artifact(spark, sf_dir)
     books, ids, codes, coarse, assign = load_pq_index(spark, sf_dir, root)
     emb = t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    return _ivf_adc_topk_stream(
+    return _adc_topk_stream(
         spark, emb, books, ids, codes, coarse, assign, n_queries=len(ids)
     )
 
@@ -2602,11 +2580,6 @@ def _pq_purge_seq(spark: SparkSession, index_root: str) -> str:
 # its queries across several calls.
 _MAX_QUERY_ROWS = 100_000
 
-# Queries LUT-ed per block inside each task: bounds the transient
-# B x M x K table to ~16 MiB (1024 x 8 x 256 doubles) no matter how
-# large the broadcast batch is.
-_SHARD_Q_BLOCK = 1024
-
 # Probe-set pruning only engages when the batch's probed-list union is
 # genuinely sparse: above this many lists the IN (...) literal lists
 # would bloat the plan (a 100k-query batch can probe |Q| x nprobe
@@ -2872,9 +2845,9 @@ def _ivf_adc_score_sharded(
     q_rows: list | None = None,
 ) -> DataFrame:
     """The scoring half of _ivf_adc_topk_sharded: broadcast the bounded
-    query batch, score shard-locally with the same LUT kernel and
-    (-score, nid) selection as _ivf_adc_topk_stream, and return the
-    per-shard winners as (qid, nid, score_raw) — UNREDUCED. Split out
+    query batch, score shard-locally with the _adc_topk kernel every
+    broadcast-index scorer shares, and return the per-shard winners as
+    (qid, nid, score_raw) — UNREDUCED. Split out
     so the tiled server can union several tiles' shard winners and pay
     the global window reduce (and its exchange + rounding stage) ONCE
     instead of once per tile; per-query top-k is independent across
@@ -2885,11 +2858,7 @@ def _ivf_adc_score_sharded(
     job and slices it per tile instead of paying one collect job per
     tile; rows beyond index 1 (2 with label) are ignored."""
     import numpy as np
-    from pyspark.sql import types as T
 
-    n_probe = min(
-        _IVFPQ_NLIST, _IVFPQ_NPROBE if nprobe is None else int(nprobe)
-    )
     q_cols = ["vec_id", "embedding"] + (["label"] if same_label else [])
     if q_rows is None:
         q_rows = q_df.select(*q_cols).limit(_MAX_QUERY_ROWS + 1).collect()
@@ -2904,9 +2873,7 @@ def _ivf_adc_score_sharded(
         # a query service passing an empty request batch gets an empty
         # result with the scoring schema, matching the flat scorer
         # (ADVICE r14: np.linalg.norm(axis=1) on a 0x0 array raised)
-        return spark.createDataFrame(
-            [], "qid long, nid long, score_raw double"
-        )
+        return spark.createDataFrame([], _ADC_RAW_SCHEMA)
     qmat = np.array([r[1] for r in q_rows], dtype=np.float64)
     qmat /= np.linalg.norm(qmat, axis=1, keepdims=True)
     qids = np.array([r[0] for r in q_rows], dtype=np.int64)
@@ -2925,8 +2892,7 @@ def _ivf_adc_score_sharded(
     # (nprobe * |Q| << nlist) never opens unprobed lists' files
     # (VERDICT r14 item 2). Bit-equality is untouched: candidates only
     # ever come from probed lists.
-    qsim = qmat @ coarse.T
-    probes = np.argsort(-qsim, axis=1)[:, :n_probe]
+    probes = _ivf_probes(qmat, coarse, nprobe)
     probed = [int(x) for x in np.unique(probes)]
     if len(probed) <= _PRUNE_MAX_LISTS and len(probed) < coarse.shape[0]:
         # sparse probe set: prune. Dense batches (every list probed, or
@@ -2937,13 +2903,6 @@ def _ivf_adc_score_sharded(
             codes_df = codes_df.filter(F.col("list_bucket").isin(buckets))
         codes_df = codes_df.filter(F.col("list_id").isin(probed))
     b = spark.sparkContext.broadcast((books, qids, qmat, qlabs, probes))
-    part_schema = T.StructType(
-        [
-            T.StructField("qid", T.LongType()),
-            T.StructField("nid", T.LongType()),
-            T.StructField("score_raw", T.DoubleType()),
-        ]
-    )
 
     def score_shard(batches):
         import pandas as pd
@@ -2952,76 +2911,28 @@ def _ivf_adc_score_sharded(
         # materialize THIS SHARD's codes (a shard is whole inverted
         # lists, corpus/nshards rows — the quantity sized to executor
         # memory; never the full table)
-        ids_l, codes_l, lists_l, labs_l = [], [], [], []
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids_l.append(pdf["vec_id"].to_numpy(np.int64))
-            # ONE bulk hex decode per batch (codes are fixed-width _PQ_M
-            # bytes; the shared helper pins that width so drift raises
-            # instead of mis-scoring) instead of a per-row Python loop —
-            # guide §4.2: hand whole batches to native code; the join +
-            # fromhex run at C speed.
-            codes_l.append(_decode_hex_codes(pdf["codes"]))
-            lists_l.append(pdf["list_id"].to_numpy(np.int64))
-            if q_labs is not None:
-                labs_l.append(pdf["label"].to_numpy(np.int64))
-        if not ids_l:
+        pdfs = [pdf for pdf in batches if len(pdf)]
+        if not pdfs:
             return
-        index_ids = np.concatenate(ids_l)
-        index_codes = np.concatenate(codes_l)
-        bucket_of = np.concatenate(lists_l)
-        labs = np.concatenate(labs_l) if q_labs is not None else None
-        members = {
-            int(li): np.flatnonzero(bucket_of == li)
-            for li in np.unique(bucket_of)
-        }
-        # routing rides the broadcast (computed once on the driver,
-        # same batched argsort as the flat scorer)
-        lut_shape = (_PQ_M, _PQ_SUB)
-        for lo in range(0, len(q), _SHARD_Q_BLOCK):
-            hi = min(lo + _SHARD_Q_BLOCK, len(q))
-            lut = np.einsum(
-                "bms,mks->bmk",
-                q[lo:hi].reshape(hi - lo, *lut_shape),
-                bk,
-            )
-            out_q, out_n, out_s = [], [], []
-            for bi in range(lo, hi):
-                hit = [
-                    members[p] for p in probes[bi] if int(p) in members
-                ]
-                if not hit:
-                    continue
-                cand = np.concatenate(hit)
-                keep = index_ids[cand] != q_ids[bi]
-                if q_labs is not None:
-                    keep &= labs[cand] == q_labs[bi]
-                cand = cand[keep]
-                if not len(cand):
-                    continue
-                s = np.zeros(len(cand))
-                for m in range(_PQ_M):
-                    s += lut[bi - lo, m, index_codes[cand, m]]
-                kk = min(k, len(cand))
-                # shard-local top-k under the SAME (-score, nid) total
-                # order as the final reduce: the global top-k is a
-                # subset of the union of shard top-ks, so the reduce
-                # loses nothing
-                top = np.lexsort((index_ids[cand], -s))[:kk]
-                out_q.extend([q_ids[bi]] * kk)
-                out_n.extend(index_ids[cand[top]])
-                out_s.extend(s[top])
-            if out_q:
-                yield pd.DataFrame(
-                    {
-                        "qid": np.array(out_q, dtype=np.int64),
-                        "nid": np.array(out_n, dtype=np.int64),
-                        "score_raw": np.array(out_s, dtype=np.float64),
-                    }
-                )
+        pdf = pd.concat(pdfs, ignore_index=True)
+        # one bulk hex decode; the helper pins the _PQ_M-byte code width
+        # so drift raises instead of mis-scoring
+        qid, nid, s = _adc_topk(
+            q,
+            q_ids,
+            probes,
+            _list_members(pdf["list_id"].to_numpy(np.int64)),
+            bk,
+            pdf["vec_id"].to_numpy(np.int64),
+            _decode_hex_codes(pdf["codes"]),
+            k,
+            q_labs,
+            None if q_labs is None else pdf["label"].to_numpy(np.int64),
+        )
+        if len(qid):
+            yield pd.DataFrame({"qid": qid, "nid": nid, "score_raw": s})
 
-    return codes_df.mapInPandas(score_shard, part_schema)
+    return codes_df.mapInPandas(score_shard, _ADC_RAW_SCHEMA)
 
 
 def _ivf_adc_reduce_topk(part: DataFrame, k: int = 5) -> DataFrame:
@@ -3102,11 +3013,11 @@ def serve_ann_ivf_pq(
     in tests/test_similarity.py).
 
     label_of: optional (vec_id, label) DataFrame switching on the
-    PER-QUERY dynamic label filter (the flat
-    _ivf_adc_topk_label_stream's semantics at corpus scale): candidate
-    labels attach to the codes shards by join, query labels ride the
-    broadcast (q_df must then carry a `label` column), and each query
-    only matches candidates sharing its label. Callers scale `nprobe`
+    PER-QUERY dynamic label filter (the broadcast-index scorer's
+    index_labels at corpus scale; both run the same _adc_topk label
+    mask): candidate labels attach to the codes shards by join, query
+    labels ride the broadcast (q_df must then carry a `label` column),
+    and each query only matches candidates sharing its label. Callers scale `nprobe`
     by the label count exactly like the flat path (bit-equality pinned
     in tests/test_similarity.py)."""
     codes_df, books, coarse = _prepare_serve_codes(
@@ -3479,9 +3390,7 @@ def _serve_tiles(
             )
             out = part if out is None else out.unionByName(part)
         if out is None:
-            out = spark.createDataFrame(
-                [], "qid long, nid long, score_raw double"
-            )
+            out = spark.createDataFrame([], _ADC_RAW_SCHEMA)
         return _ivf_adc_reduce_topk(out, k=k)
     # many-tile path: stage the tiles once, append results per tile.
     # The query table is written exactly once (`_tile`-partitioned);
@@ -3500,7 +3409,6 @@ def _serve_tiles(
     q_path = f"{work}/queries"
     out_path = f"{work}/topk"
     tiled.write.partitionBy("_tile").mode("overwrite").parquet(q_path)
-    out_schema = "qid long, nid long, adc_score double"
     for i in range(nt):
         tile_q = (
             spark.read.parquet(q_path)
@@ -3514,7 +3422,7 @@ def _serve_tiles(
         part.write.mode("append").parquet(out_path)
     # explicit schema: a degenerate sweep where every tile wrote zero
     # rows leaves no footers to infer from
-    return spark.read.schema(out_schema).parquet(out_path)
+    return spark.read.schema(_ADC_SCHEMA).parquet(out_path)
 
 
 @query("embed_ann_ivf_pq_sharded")
@@ -3669,16 +3577,18 @@ def embed_ann_pq_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", "embedding")
         .filter((bucket < _TEST_LT) & ~(bucket < "0d"))
     )
-    # exact |Q| driver-side from the already-loaded id array (the flat
-    # loader bounds it): Spark's md5(cast(vec_id as string)) equals
-    # hashlib md5 of the decimal string, so this counts exactly the rows
-    # the filter above keeps — sizes the scorer spread without a job
+    # |Q| sizing ESTIMATE, used only to size the scorer spread (never to
+    # filter or score): it counts the loaded INDEX ids that fall in the
+    # newest-batch md5 buckets (Spark's md5(cast(vec_id as string))
+    # equals hashlib md5 of the decimal string), which matches the
+    # filtered query rows only while the indexed corpus is exactly the
+    # embeddings table the filter scans — no job needed
     n_q = sum(
         1
         for i in ids
         if "0d" <= hashlib.md5(str(int(i)).encode()).hexdigest()[:2] < _TEST_LT
     )
-    return _ivf_adc_topk_stream(
+    return _adc_topk_stream(
         spark, emb, books, ids, codes, coarse, assign, n_queries=n_q
     )
 
@@ -3833,7 +3743,7 @@ def embed_ann_filtered_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     sel = max(float(mask.mean()), 1.0 / _IVFPQ_NLIST)
     nprobe = math.ceil(_IVFPQ_NPROBE / sel)
-    return _ivf_adc_topk_stream(
+    return _adc_topk_stream(
         spark,
         emb,
         books,
@@ -3961,93 +3871,11 @@ def embed_ann_same_label_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     label_of = {int(v): int(lb) for v, lb in lab_rows}
     index_labels = np.array([label_of[int(v)] for v in ids], dtype=np.int64)
     n_labels = max(1, len(set(index_labels.tolist())))
-    nprobe = min(_IVFPQ_NLIST, math.ceil(_IVFPQ_NPROBE * n_labels))
     emb = t(spark, sf_dir, "embeddings").select("vec_id", "embedding", "label")
-    return _ivf_adc_topk_label_stream(
-        spark, emb, books, ids, codes, coarse, assign, index_labels,
-        k=3, nprobe=nprobe,
+    return _adc_topk_stream(
+        spark, emb, books, ids, codes, coarse, assign, k=3,
+        nprobe=math.ceil(_IVFPQ_NPROBE * n_labels), index_labels=index_labels,
     )
-
-
-def _ivf_adc_topk_label_stream(
-    spark: SparkSession,
-    emb: DataFrame,
-    books,
-    ids,
-    codes,
-    coarse,
-    assign,
-    index_labels,
-    k: int = 3,
-    nprobe: int | None = None,
-) -> DataFrame:
-    """IVF-ADC top-k with a PER-QUERY label-equality mask: identical
-    routing/LUT/tie-break discipline as _ivf_adc_topk_stream, plus one
-    vectorized `labels[cand] == qlabel` compare per query. Kept as a
-    sibling rather than a flag on the shared scorer so the static-mask
-    paths pay zero per-query filter cost."""
-    import numpy as np
-    from pyspark.sql import types as T
-
-    n_probe = min(
-        _IVFPQ_NLIST, _IVFPQ_NPROBE if nprobe is None else int(nprobe)
-    )
-    b_all = spark.sparkContext.broadcast(
-        (books, ids, codes, coarse, assign, index_labels)
-    )
-    out_schema = T.StructType(
-        [
-            T.StructField("qid", T.LongType()),
-            T.StructField("nid", T.LongType()),
-            T.StructField("adc_score", T.DoubleType()),
-        ]
-    )
-
-    def score(batches):
-        import pandas as pd
-
-        bk, index_ids, index_codes, cents, bucket_of, labs = b_all.value
-        members = [
-            np.flatnonzero(bucket_of == li) for li in range(len(cents))
-        ]
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            q = np.array(list(pdf["embedding"]), dtype=np.float64)
-            q /= np.linalg.norm(q, axis=1, keepdims=True)
-            qids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            qlabs = pdf["label"].to_numpy(dtype=np.int64)
-            qsim = q @ cents.T
-            probes = np.argsort(-qsim, axis=1)[:, :n_probe]
-            lut = np.einsum(
-                "bms,mks->bmk", q.reshape(len(q), _PQ_M, _PQ_SUB), bk
-            )
-            out_q, out_n, out_s = [], [], []
-            for bi in range(len(q)):
-                cand = np.concatenate([members[p] for p in probes[bi]])
-                cand = cand[
-                    (index_ids[cand] != qids[bi])
-                    & (labs[cand] == qlabs[bi])
-                ]
-                if not len(cand):
-                    continue
-                s = np.zeros(len(cand))
-                for m in range(_PQ_M):
-                    s += lut[bi, m, index_codes[cand, m]]
-                kk = min(k, len(cand))
-                top = np.lexsort((index_ids[cand], -s))[:kk]
-                out_q.extend([qids[bi]] * kk)
-                out_n.extend(index_ids[cand[top]])
-                out_s.extend(np.round(s[top], 4))
-            yield pd.DataFrame(
-                {
-                    "qid": np.array(out_q, dtype=np.int64),
-                    "nid": np.array(out_n, dtype=np.int64),
-                    "adc_score": np.array(out_s, dtype=np.float64),
-                }
-            )
-
-    return emb.mapInPandas(score, out_schema)
 
 
 # Hybrid retrieval: reciprocal-rank fusion of a lexical ranking and a
@@ -4382,7 +4210,7 @@ def embed_ann_join_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", "embedding")
         .filter(_split_bucket("vec_id") < _TEST_LT)
     )
-    return _ivf_adc_topk_stream(
+    return _adc_topk_stream(
         spark,
         emb,
         books,

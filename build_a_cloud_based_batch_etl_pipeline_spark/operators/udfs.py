@@ -25,8 +25,9 @@ from .util import rbin, t
 def np_round4(col: pd.Series) -> pd.Series:
     """numpy rounding (half-to-even) at 4dp as a vectorized column fn —
     used where a distributed reduce must emit BIT-IDENTICAL values to a
-    numpy-rounding scorer (similarity._ivf_adc_topk_sharded vs the
-    broadcast ADC paths): F.round is HALF_UP, so a decimal-boundary
+    numpy-rounding scorer (similarity._ivf_adc_reduce_topk rounds the
+    sharded winners exactly as similarity._adc_topk_stream rounds the
+    broadcast-index rows): F.round is HALF_UP, so a decimal-boundary
     score would diverge between the two engines' rounding modes."""
     import numpy as np
 

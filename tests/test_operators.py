@@ -791,3 +791,40 @@ def test_theil_sen_matches_python_exact(spark, sf_dir):
             for d2 in days[i + 1 :]
         ]
         assert min(raw) - 1e-3 <= slope <= max(raw) + 1e-3
+
+
+def test_referential_integrity_plan_memo_rebuilds_on_table_rewrite(
+    spark, sf_dir, tmp_path
+):
+    """dq_referential_integrity memoizes its built plan; the memo key
+    carries the content fingerprint of every table the plan reads, so
+    rewriting one of them in the same session rebuilds the plan (fresh
+    file listing, fresh counts) instead of serving the stale one, while
+    an untouched fixture still reuses it."""
+    import shutil
+
+    from build_a_cloud_based_batch_etl_pipeline_spark.operators.dq import (
+        dq_referential_integrity,
+    )
+
+    sf = str(tmp_path)
+    for name in ("lineitem", "orders", "part", "supplier", "customer", "nation"):
+        shutil.copy(f"{sf_dir}/{name}.parquet", f"{sf}/{name}.parquet")
+    first = dq_referential_integrity(spark, sf)
+    assert dq_referential_integrity(spark, sf) is first, "warm call must reuse"
+    before = {r.rel: r.n_orphans for r in first.collect()}
+    assert before["lineitem->orders"] == 0
+
+    # drop every odd order: their line items become orphans
+    spark.read.parquet(f"{sf_dir}/orders.parquet").filter(
+        F.col("o_orderkey") % 2 == 0
+    ).write.mode("overwrite").parquet(f"{sf}/orders.parquet")
+    rebuilt = dq_referential_integrity(spark, sf)
+    assert rebuilt is not first, "rewritten table must rebuild the plan"
+    after = {r.rel: r.n_orphans for r in rebuilt.collect()}
+    odd_lines = (
+        spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+        .filter(F.col("l_orderkey") % 2 == 1)
+        .count()
+    )
+    assert after["lineitem->orders"] == odd_lines > 0

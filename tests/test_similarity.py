@@ -322,25 +322,6 @@ def test_ann_join_recall_and_corpus_disjointness(spark, sf_dir):
     assert max(per_q.values()) <= 3
 
 
-def test_pq_adc_chunked_merge_matches_single_chunk(spark, sf_dir, monkeypatch):
-    """ADC scores the index in fixed-size chunks with a per-chunk top-k
-    merge (bounded scratch memory). Forcing many tiny chunks must yield
-    exactly the same neighbor set and scores as the one-chunk default —
-    the merge may never lose a global top-k element."""
-    from build_a_cloud_based_batch_etl_pipeline_spark.operators import similarity
-
-    base = {
-        (r.qid, r.nid, r.adc_score)
-        for r in REGISTRY["embed_ann_pq"].fn(spark, sf_dir).collect()
-    }
-    monkeypatch.setattr(similarity, "_ADC_CHUNK", 97)
-    chunked = {
-        (r.qid, r.nid, r.adc_score)
-        for r in REGISTRY["embed_ann_pq"].fn(spark, sf_dir).collect()
-    }
-    assert base == chunked
-
-
 def test_pq_adc_tiny_index_under_k(spark, tmp_path):
     """An index with fewer than k vectors must not crash the top-k
     selection (argpartition kth bound): each query gets all non-self
@@ -445,23 +426,21 @@ def test_scale_sweep_exponent_clamps_subms_timings():
 
 
 def test_pq_adc_score_ties_resolve_to_smallest_nid_across_chunks(
-    spark, tmp_path, monkeypatch
+    spark, tmp_path
 ):
     """Planted identical vectors get identical PQ codes and exactly tied
     ADC scores; the selection contract is (-score, nid) — smallest id
-    wins a tie — and must hold for ANY chunk size, including ties that
-    straddle a chunk boundary (stable per-chunk selection; argpartition
-    would keep an arbitrary tied subset)."""
+    wins a tie — and must hold however the candidates are ordered
+    (argpartition would keep an arbitrary tied subset), identically on
+    a cold re-run."""
     import numpy as np
-
-    from build_a_cloud_based_batch_etl_pipeline_spark.operators import similarity
 
     rng = np.random.RandomState(5)
     base = rng.randn(3, 64).astype("float32")
     rows = []
     vid = 0
     # 8 copies of each base vector -> big tie groups; interleave ids so
-    # every small chunk holds members of several tie groups
+    # no tie group is contiguous in id order
     for copy in range(8):
         for b in range(3):
             rows.append((vid, [float(x) for x in base[b]], b))
@@ -472,19 +451,17 @@ def test_pq_adc_score_ties_resolve_to_smallest_nid_across_chunks(
     sf = str(tmp_path)
     df.coalesce(1).write.parquet(f"{sf}/embeddings.parquet")
 
-    def neighbors(chunk):
+    def neighbors():
         from build_a_cloud_based_batch_etl_pipeline_spark.operators.util import (
             memo_once_clear,
         )
 
-        monkeypatch.setattr(similarity, "_ADC_CHUNK", chunk)
         memo_once_clear(spark)
         out = REGISTRY["embed_ann_pq"].fn(spark, sf).collect()
         return sorted((r.qid, r.nid, r.adc_score) for r in out)
 
-    small = neighbors(5)   # tie groups straddle chunk boundaries
-    full = neighbors(10_000)
-    assert small == full, "neighbor set depends on _ADC_CHUNK"
+    full = neighbors()
+    assert neighbors() == full, "tied neighbor set differs across cold runs"
     # ids were interleaved round-robin, so group g holds ids {g, g+3,
     # g+6, ...}: every query's 5 neighbors must be the 5 SMALLEST other
     # ids of its own tie group (identical vectors -> exactly tied
@@ -493,6 +470,85 @@ def test_pq_adc_score_ties_resolve_to_smallest_nid_across_chunks(
         got = sorted(n for qq, n, _ in full if qq == q)
         group = [v for v in range(24) if v % 3 == q % 3 and v != q]
         assert got == group[:5], (q, got)
+
+
+def _bruteforce_adc(books, ids, codes, qids, qmat, k, eligible, qlabs=None,
+                    labels=None):
+    """Independent ADC reference: the full (|Q| x |index|) score matrix
+    of LUT sums, then each query's (-score, nid) order over every
+    eligible non-self vector, rounded to 4 dp. Every list is probed,
+    so no routing is involved."""
+    import numpy as np
+
+    q = qmat / np.linalg.norm(qmat, axis=1, keepdims=True)
+    lut = np.einsum("bms,mks->bmk", q.reshape(len(q), 8, 8), books)
+    scores = np.zeros((len(q), len(ids)))
+    for m in range(8):
+        scores += lut[:, m, codes[:, m]]
+    out = []
+    for b in range(len(q)):
+        ok = eligible & (ids != qids[b])
+        if labels is not None:
+            ok &= labels == qlabs[b]
+        cand = np.flatnonzero(ok)
+        s = scores[b, cand]
+        for j in np.lexsort((ids[cand], -s))[:k]:
+            out.append(
+                (int(qids[b]), int(ids[cand[j]]), float(np.round(s[j], 4)))
+            )
+    return sorted(out)
+
+
+def test_adc_kernel_matches_bruteforce_reference(spark, sf_dir):
+    """Every ADC scorer — flat scan, IVF with a static mask, the
+    per-query label mask, and the sharded server — probes every list
+    here (nprobe = nlist), so each must reproduce the brute-force
+    reference exactly: same neighbors, same tie-break, same rounding."""
+    import numpy as np
+
+    from build_a_cloud_based_batch_etl_pipeline_spark.operators import (
+        similarity as sim,
+    )
+
+    root = sim._pq_index_artifact(spark, sf_dir)
+    books, ids, codes, coarse, assign = sim.load_pq_index(spark, sf_dir, root)
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+        "vec_id", "embedding", "label"
+    )
+    rows = emb.collect()
+    qids = np.array([r.vec_id for r in rows], dtype=np.int64)
+    qmat = np.array([r.embedding for r in rows], dtype=np.float64)
+    qlabs = np.array([r.label for r in rows], dtype=np.int64)
+    label_of = dict(zip(qids.tolist(), qlabs.tolist()))
+    labels = np.array([label_of[int(v)] for v in ids], dtype=np.int64)
+    everyone = np.ones(len(ids), dtype=bool)
+    mask = ids % 3 != 0
+    nlist = sim._IVFPQ_NLIST
+    q2 = emb.select("vec_id", "embedding")
+
+    def got(df):
+        return sorted((r.qid, r.nid, r.adc_score) for r in df.collect())
+
+    flat = got(sim._adc_topk_stream(spark, q2, books, ids, codes))
+    assert flat == _bruteforce_adc(books, ids, codes, qids, qmat, 5, everyone)
+
+    masked = got(sim._adc_topk_stream(
+        spark, q2, books, ids, codes, coarse, assign, k=3,
+        index_mask=mask, nprobe=nlist,
+    ))
+    assert masked == _bruteforce_adc(books, ids, codes, qids, qmat, 3, mask)
+    assert all(n % 3 != 0 for _, n, _ in masked)
+
+    by_label = got(sim._adc_topk_stream(
+        spark, emb, books, ids, codes, coarse, assign, k=3, nprobe=nlist,
+        index_labels=labels,
+    ))
+    assert by_label == _bruteforce_adc(
+        books, ids, codes, qids, qmat, 3, everyone, qlabs, labels
+    )
+
+    served = got(sim.serve_ann_ivf_pq(spark, q2, root, nprobe=nlist))
+    assert served == flat
 
 
 def test_pq_index_build_load_query_contract(spark, tmp_path):
@@ -1664,7 +1720,7 @@ def test_sharded_serving_with_epochs_matches_flat_incremental(spark, tmp_path):
     )
     flat = sorted(
         (r.qid, r.nid, r.adc_score)
-        for r in sim._ivf_adc_topk_stream(
+        for r in sim._adc_topk_stream(
             spark, new_df, books, ids, codes, coarse, assign
         ).collect()
     )

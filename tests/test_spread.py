@@ -12,10 +12,20 @@ sizing decides).
 
 from __future__ import annotations
 
+import re
+
 from build_a_cloud_based_batch_etl_pipeline_spark.operators.util import (
     _SPREAD_ROWS_PER_TASK,
     spread_small_input,
 )
+
+
+def _exchanges(df) -> int:
+    """Shuffle Exchange nodes in df's executed plan (an executed
+    adaptive plan prints its final and initial trees; the initial one
+    is counted)."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return len(re.findall(r"\bExchange\b", plan.split("== Initial Plan ==")[-1]))
 
 
 def _df_with_partitions(spark, n_rows: int, n_parts: int):
@@ -45,6 +55,7 @@ def test_row_cap_coalesces_oversplit_tiny_input(spark):
     # the repartition the fixture itself created
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Coalesce" in plan
+    assert _exchanges(out) == _exchanges(df) == 1
 
 
 def test_row_cap_inert_when_target_reaches_parallelism(spark):
