@@ -1451,12 +1451,15 @@ def _list_members(list_of, eligible=None) -> dict:
 def _ivf_probes(q, coarse, nprobe: int | None):
     """Each (normalized) query's probed inverted lists: its `nprobe`
     (default _IVFPQ_NPROBE, at most _IVFPQ_NLIST) nearest coarse
-    centroids by inner product, one batched argsort."""
+    centroids by inner product, one batched argsort. An nprobe below 1
+    raises: 0 would probe nothing and a negative slice would silently
+    probe NLIST - |nprobe| lists."""
     import numpy as np
 
-    n_probe = min(
-        _IVFPQ_NLIST, _IVFPQ_NPROBE if nprobe is None else int(nprobe)
-    )
+    n_probe = _IVFPQ_NPROBE if nprobe is None else int(nprobe)
+    if n_probe < 1:
+        raise ValueError(f"nprobe must be at least 1, got {nprobe}")
+    n_probe = min(_IVFPQ_NLIST, n_probe)
     return np.argsort(-(q @ coarse.T), axis=1)[:, :n_probe]
 
 
@@ -1618,8 +1621,9 @@ _IVFPQ_NPROBE = 3
 # bucket, not raw list_id, because production nlist scales with the
 # corpus (the nlist ~ N rule) and one directory per inverted list
 # would melt the file listing; 16 buckets bounds directory fan-out
-# while the residual within-bucket selectivity is still enforced by
-# the pushed list_id IN (...) data filter (row-group stats).
+# while the residual within-bucket selectivity (only when nlist
+# exceeds the bucket count) is enforced by the pushed list_id IN (...)
+# data filter (row-group stats).
 _PQ_LIST_BUCKETS = 16
 
 
@@ -2847,16 +2851,20 @@ def _ivf_adc_score_sharded(
     """The scoring half of _ivf_adc_topk_sharded: broadcast the bounded
     query batch, score shard-locally with the _adc_topk kernel every
     broadcast-index scorer shares, and return the per-shard winners as
-    (qid, nid, score_raw) — UNREDUCED. Split out
-    so the tiled server can union several tiles' shard winners and pay
-    the global window reduce (and its exchange + rounding stage) ONCE
-    instead of once per tile; per-query top-k is independent across
-    queries, so reducing the union is bit-equal to reducing per tile.
+    (qid, nid, score_raw) — UNREDUCED. Split out so the tiled server
+    can union several tiles' shard winners and pay the global window
+    reduce (and its exchange) ONCE instead of once per tile; per-query
+    top-k is independent across queries, so reducing the union is
+    bit-equal to reducing per tile.
 
-    q_rows: pre-collected query rows (vec_id, embedding[, label], ...)
-    — the tiled server collects the whole pinned batch in ONE driver
-    job and slices it per tile instead of paying one collect job per
-    tile; rows beyond index 1 (2 with label) are ignored."""
+    q_rows: query rows already on the driver (vec_id, embedding[,
+    label], ...), used in place of q_df (which may then be None) — the
+    tiled server collects the whole pinned batch in ONE driver job and
+    slices it per tile instead of paying one collect job per tile, and
+    the /ann HTTP handler passes the rows it parsed from the request
+    body, so no DataFrame is built only to be collected back (the
+    collect of an RDD-backed DataFrame runs as two Spark jobs); fields
+    beyond index 1 (2 with label) are ignored."""
     import numpy as np
 
     q_cols = ["vec_id", "embedding"] + (["label"] if same_label else [])
@@ -2887,21 +2895,39 @@ def _ivf_adc_score_sharded(
     # recompute the identical argsort each): besides dropping the
     # redundant per-shard work, the union of probed lists becomes a
     # PREDICATE on the codes table — list_bucket IN (...) prunes whole
-    # hive partitions at the scan and list_id IN (...) prunes row
-    # groups via parquet stats, so a sparse request batch
-    # (nprobe * |Q| << nlist) never opens unprobed lists' files
-    # (VERDICT r14 item 2). Bit-equality is untouched: candidates only
-    # ever come from probed lists.
+    # hive partitions at the scan and, where a bucket holds unprobed
+    # lists, list_id IN (...) prunes row groups via parquet stats, so
+    # a sparse request batch (nprobe * |Q| << nlist) never opens
+    # unprobed lists' files (VERDICT r14 item 2). Bit-equality is
+    # untouched: candidates only ever come from probed lists.
     probes = _ivf_probes(qmat, coarse, nprobe)
     probed = [int(x) for x in np.unique(probes)]
     if len(probed) <= _PRUNE_MAX_LISTS and len(probed) < coarse.shape[0]:
         # sparse probe set: prune. Dense batches (every list probed, or
         # an IN list big enough to bloat the plan) scan unfiltered —
         # the predicates would skip nothing worth their planning cost.
+        #
+        # The list_id predicate is added only when the chosen buckets
+        # also hold unprobed lists (a pre-bucketing index, or nlist
+        # above the bucket count). It runs in the scan stage's
+        # generated code with its literals inlined, so each distinct
+        # probe set compiles two new classes per request, a cost that
+        # grows with host load. The partition predicate is evaluated
+        # at planning and compiles nothing.
+        preds, exact = [], False
         if "list_bucket" in codes_df.columns:
-            buckets = sorted({p % _PQ_LIST_BUCKETS for p in probed})
-            codes_df = codes_df.filter(F.col("list_bucket").isin(buckets))
-        codes_df = codes_df.filter(F.col("list_id").isin(probed))
+            buckets = {p % _PQ_LIST_BUCKETS for p in probed}
+            preds.append(
+                f"list_bucket IN ({', '.join(map(str, sorted(buckets)))})"
+            )
+            exact = set(probed) == {
+                lst
+                for lst in range(coarse.shape[0])
+                if lst % _PQ_LIST_BUCKETS in buckets
+            }
+        if not exact:
+            preds.append(f"list_id IN ({', '.join(map(str, probed))})")
+        codes_df = codes_df.where(" AND ".join(preds))
     b = spark.sparkContext.broadcast((books, qids, qmat, qlabs, probes))
 
     def score_shard(batches):
@@ -2938,16 +2964,20 @@ def _ivf_adc_score_sharded(
 def _ivf_adc_reduce_topk(part: DataFrame, k: int = 5) -> DataFrame:
     """The reduce half of _ivf_adc_topk_sharded: global per-query top-k
     over shard winners under the engine-wide (-score, nid) total order.
-    Raw (unrounded) scores travel through the reduce and are rounded by
-    the identical numpy round at the very end, so the output is
-    bit-equal to the broadcast scorer's for the same artifacts.
+    Raw (unrounded) scores travel through the reduce and are rounded to
+    4 dp at the very end, bit-equal to the broadcast scorer's
+    np.round(s, 4) for the same artifacts.
 
-    identical rounding to the broadcast scorer's np.round (F.round
-    would HALF_UP where numpy rounds half-to-even — the exact
-    divergence class ADVICE r13 flagged in the drift rule)."""
+    The rounding runs in the JVM as rint(x * 1e4) / 1e4. numpy's
+    np.round(x, 4) is exactly that: multiply by the double 1e4, round
+    half-to-even (rint), divide by 1e4. Spark's double `*`, Rint
+    (java.lang.Math.rint, half-even) and `/` are the same IEEE
+    operations, so the two agree bit for bit — ties, negatives and
+    signed zeros included (pinned in tests/test_similarity.py).
+    F.round would not: it rounds HALF_UP through the decimal value, so
+    a score on a 4-dp half boundary would diverge from the broadcast
+    scorer."""
     from pyspark.sql.window import Window
-
-    from .udfs import np_round4
 
     w = Window.partitionBy("qid").orderBy(
         F.col("score_raw").desc(), F.col("nid").asc()
@@ -2955,7 +2985,11 @@ def _ivf_adc_reduce_topk(part: DataFrame, k: int = 5) -> DataFrame:
     return (
         part.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= k)
-        .select("qid", "nid", np_round4("score_raw").alias("adc_score"))
+        .select(
+            "qid",
+            "nid",
+            (F.rint(F.col("score_raw") * 1e4) / 1e4).alias("adc_score"),
+        )
     )
 
 
@@ -2968,15 +3002,16 @@ def _ivf_adc_topk_sharded(
     k: int = 5,
     nprobe: int | None = None,
     same_label: bool = False,
+    q_rows: list | None = None,
 ) -> DataFrame:
     """IVF-routed ADC top-k with the CODES side distributed: the
     sharded scoring pass (_ivf_adc_score_sharded) composed with the
     global window reduce (_ivf_adc_reduce_topk) — see the two halves
-    for the kernel and rounding contracts."""
+    for the kernel, `q_rows` and rounding contracts."""
     return _ivf_adc_reduce_topk(
         _ivf_adc_score_sharded(
             spark, codes_df, q_df, books, coarse,
-            k=k, nprobe=nprobe, same_label=same_label,
+            k=k, nprobe=nprobe, same_label=same_label, q_rows=q_rows,
         ),
         k=k,
     )
@@ -2992,6 +3027,7 @@ def serve_ann_ivf_pq(
     nprobe: int | None = None,
     eligible: DataFrame | None = None,
     label_of: DataFrame | None = None,
+    q_rows: list | None = None,
 ) -> DataFrame:
     """Online ANN serving against a persisted (optionally
     epoch-appended) IVF-PQ index with the codes table DISTRIBUTED — the
@@ -3019,7 +3055,11 @@ def serve_ann_ivf_pq(
     labels ride the broadcast (q_df must then carry a `label` column),
     and each query only matches candidates sharing its label. Callers scale `nprobe`
     by the label count exactly like the flat path (bit-equality pinned
-    in tests/test_similarity.py)."""
+    in tests/test_similarity.py).
+
+    q_rows: the query batch as driver-side rows (vec_id, embedding[,
+    label]) instead of q_df (pass None for it) — what the /ann handler
+    does with the rows it parsed; see _ivf_adc_score_sharded."""
     codes_df, books, coarse = _prepare_serve_codes(
         spark, index_root, include_epochs, allow_drift, eligible, label_of
     )
@@ -3032,6 +3072,7 @@ def serve_ann_ivf_pq(
         k=k,
         nprobe=nprobe,
         same_label=label_of is not None,
+        q_rows=q_rows,
     )
 
 
@@ -3229,7 +3270,7 @@ def serve_ann_ivf_pq_tiled(
         if n <= limit:
             return _ivf_adc_topk_sharded(
                 spark, codes_df, q_df, books, coarse,
-                k=k, nprobe=nprobe, same_label=same_label,
+                k=k, nprobe=nprobe, same_label=same_label, q_rows=rows_all,
             )
         dup_max = max(Counter(r[0] for r in rows_all).values())
         if dup_max > limit:
@@ -3363,8 +3404,8 @@ def _serve_tiles(
         # window reduce once: queries partition across tiles (a qid
         # lives in exactly one tile), so one per-qid top-k over the
         # union is bit-equal to reducing per tile — and the plan drops
-        # from one exchange + sort + window + Arrow rounding stage PER
-        # TILE to one of each TOTAL (guide §2.4: two operations keyed
+        # from one exchange + sort + window PER TILE to one of each
+        # TOTAL (guide §2.4: two operations keyed
         # the same way share one exchange).
         by_tile: dict[int, list] | None = None
         if rows_all is not None:

@@ -22,19 +22,6 @@ from .util import rbin, t
 
 
 @F.pandas_udf(T.DoubleType())
-def np_round4(col: pd.Series) -> pd.Series:
-    """numpy rounding (half-to-even) at 4dp as a vectorized column fn —
-    used where a distributed reduce must emit BIT-IDENTICAL values to a
-    numpy-rounding scorer (similarity._ivf_adc_reduce_topk rounds the
-    sharded winners exactly as similarity._adc_topk_stream rounds the
-    broadcast-index rows): F.round is HALF_UP, so a decimal-boundary
-    score would diverge between the two engines' rounding modes."""
-    import numpy as np
-
-    return pd.Series(np.round(col.to_numpy(dtype=float), 4))
-
-
-@F.pandas_udf(T.DoubleType())
 def _charge_udf(price: pd.Series, discount: pd.Series, tax: pd.Series) -> pd.Series:
     """Vectorized charge computation: whole Arrow batches, numpy ops.
     No rounding here: pandas .round() is half-even while SQL round is

@@ -32,13 +32,17 @@ src/load/main.py:58-84):
 
   drives operators.similarity.serve_ann_ivf_pq — index validation is
   memoized per (version, epoch set, purge seq), so steady-state
-  requests pay load+score only. 200 with ``{"success": true,
-  "results": [{"qid": ..., "nid": ..., "adc_score": ...}, ...]}``;
-  400 with the standard envelope on a malformed body (missing/ragged
-  queries, non-numeric k) and on an over-cap batch — that one names
-  serve_ann_ivf_pq_tiled, the documented tiling path; 500 envelope
-  when the serve itself refuses (torn index, drifted epochs,
-  mixed-codebook codes).
+  requests pay load+score only. The parsed query rows go straight to
+  the scorer (its ``q_rows``): no DataFrame is built for them only to
+  be collected back, so a warm request costs 2 Spark jobs — the
+  shard-local scoring stage and the global top-k reduce. 200 with
+  ``{"success": true, "results": [{"qid": ..., "nid": ...,
+  "adc_score": ...}, ...]}``; 400 with the standard envelope on a
+  malformed body (missing/ragged queries, non-numeric k, k or nprobe
+  below 1, a non-finite embedding component, a zero-norm embedding)
+  and on an over-cap batch — that one names serve_ann_ivf_pq_tiled,
+  the documented tiling path; 500 envelope when the serve itself
+  refuses (torn index, drifted epochs, mixed-codebook codes).
 
 No flask / functions_framework: the sandbox ships neither, and a
 scheduled-batch engine needs ~60 lines of stdlib routing, not a web
@@ -80,7 +84,13 @@ def _parse_ann_request(body: bytes) -> tuple[str, list, int, int | None] | str:
     error STRING describing the 400. Validation is driver-side and
     O(|Q|): the batch is bounded by the serve cap anyway, and a ragged
     or non-numeric embedding must be the caller's 400, not a numpy
-    stack trace out of an executor."""
+    stack trace out of an executor. Non-finite components (json.loads
+    and float() both accept NaN / Infinity) and zero-norm embeddings
+    are refused too: the scorer L2-normalizes each query, so either
+    would put NaN scores into a 200 reply — and json.dumps writes NaN
+    as a token that is not valid JSON."""
+    import numpy as np
+
     from .operators.similarity import _MAX_QUERY_ROWS
 
     try:
@@ -98,6 +108,8 @@ def _parse_ann_request(body: bytes) -> tuple[str, list, int, int | None] | str:
         return "queries must be a non-empty list"
     if k <= 0:
         return "k must be positive"
+    if nprobe is not None and nprobe < 1:
+        return "nprobe must be at least 1"
     if len(queries) > _MAX_QUERY_ROWS:
         return (
             f"query batch of {len(queries)} exceeds the "
@@ -118,6 +130,19 @@ def _parse_ann_request(body: bytes) -> tuple[str, list, int, int | None] | str:
         if not emb or len(emb) != dim:
             return "ragged or empty embedding in query batch"
         rows.append((vid, emb))
+    qmat = np.array([emb for _vid, emb in rows], dtype=np.float64)
+    finite = np.isfinite(qmat).all(axis=1)
+    if not finite.all():
+        vid = rows[int(np.argmin(finite))][0]
+        return f"non-finite embedding component in query vec_id {vid}"
+    # the same norm the scorer divides by (_ivf_adc_score_sharded)
+    norms = np.linalg.norm(qmat, axis=1)
+    normal = (norms > 0) & np.isfinite(norms)
+    if not normal.all():
+        vid = rows[int(np.argmin(normal))][0]
+        return (
+            f"embedding of query vec_id {vid} has a zero or non-finite norm"
+        )
     return root, rows, k, nprobe
 
 
@@ -161,9 +186,6 @@ def make_handler(
                 try:
                     from .operators.similarity import serve_ann_ivf_pq
 
-                    q_df = spark.createDataFrame(
-                        rows, "vec_id long, embedding array<double>"
-                    )
                     out = [
                         {
                             "qid": r.qid,
@@ -171,7 +193,8 @@ def make_handler(
                             "adc_score": r.adc_score,
                         }
                         for r in serve_ann_ivf_pq(
-                            spark, q_df, root, k=k, nprobe=nprobe
+                            spark, None, root, k=k, nprobe=nprobe,
+                            q_rows=rows,
                         ).collect()
                     ]
                 except Exception as exc:  # serve refusals -> 500 envelope

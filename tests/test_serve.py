@@ -135,18 +135,25 @@ def ann_index(spark, sf_dir):
 def test_ann_route_serves_topk(server, ann_index, spark):
     """POST /ann (VERDICT r15 item 6 — the query-side service surface):
     a bounded query batch returns the same (qid, nid, adc_score) rows
-    serve_ann_ivf_pq computes, through a real socket."""
+    serve_ann_ivf_pq computes, through a real socket. The batch is the
+    benchmark's largest (256 queries, k=10); the handler passes its
+    parsed rows to the scorer (q_rows) while the reference side goes
+    through a query DataFrame, so this also pins the two query paths
+    to the same rows."""
     from build_a_cloud_based_batch_etl_pipeline_spark.operators import (
         similarity as sim,
     )
 
     base, _cfg = server
     root, emb = ann_index
-    qrows = emb.select("vec_id", "embedding").orderBy("vec_id").limit(4).collect()
+    qrows = (
+        emb.select("vec_id", "embedding").orderBy("vec_id").limit(256).collect()
+    )
+    assert len(qrows) == 256
     body = json.dumps(
         {
             "index_root": root,
-            "k": 3,
+            "k": 10,
             "queries": [
                 {"vec_id": r.vec_id, "embedding": list(r.embedding)}
                 for r in qrows
@@ -163,9 +170,81 @@ def test_ann_route_serves_topk(server, ann_index, spark):
     )
     want = sorted(
         (r.qid, r.nid, r.adc_score)
-        for r in sim.serve_ann_ivf_pq(spark, q_df, root, k=3).collect()
+        for r in sim.serve_ann_ivf_pq(spark, q_df, root, k=10).collect()
     )
     assert got == want and got
+    assert len({q for q, _n, _s in got}) == 256
+
+
+def test_ann_serve_rows_path_costs_two_jobs_and_no_python_udf(spark, ann_index):
+    """A warm serve of driver-side query rows (what POST /ann does)
+    runs at most 2 Spark jobs — shard scoring and the top-k reduce (a
+    query DataFrame collected back to the driver would add 2 more) —
+    and its executed plan evaluates no Python UDF: the 4-dp rounding
+    is a JVM expression."""
+    from build_a_cloud_based_batch_etl_pipeline_spark.operators import (
+        similarity as sim,
+    )
+
+    root, emb = ann_index
+    rows = [
+        (r.vec_id, list(r.embedding))
+        for r in emb.select("vec_id", "embedding")
+        .orderBy("vec_id")
+        .limit(16)
+        .collect()
+    ]
+    # cold call: pays the loader's once-per-index-state validation
+    cold = sim.serve_ann_ivf_pq(spark, None, root, k=10, q_rows=rows).collect()
+    sc = spark.sparkContext
+    group = "ann_serve_rows_path_jobs"
+    sc.setJobGroup(group, group)
+    try:
+        df = sim.serve_ann_ivf_pq(spark, None, root, k=10, q_rows=rows)
+        warm = df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 1 <= len(jobs) <= 2, jobs
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" in plan
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    assert sorted(warm) == sorted(cold) and len(warm) == 16 * 10
+
+
+def test_ann_serve_sparse_probe_compiles_no_code(spark, ann_index):
+    """A warm request whose probe set is sparse (one query probes
+    nprobe of the 16 lists) compiles no new generated code. With one
+    list per bucket the list_bucket partition predicate already selects
+    exactly the probed lists, so no list_id IN (...) data predicate is
+    added; its inlined literals made every distinct probe set compile
+    two new classes per request."""
+    from build_a_cloud_based_batch_etl_pipeline_spark.operators import (
+        similarity as sim,
+    )
+
+    root, emb = ann_index
+    rows = [
+        (r.vec_id, list(r.embedding))
+        for r in emb.select("vec_id", "embedding")
+        .orderBy("vec_id")
+        .limit(4)
+        .collect()
+    ]
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def serve(q) -> tuple[list, str]:
+        df = sim.serve_ann_ivf_pq(spark, None, root, k=10, q_rows=[q])
+        return df.collect(), df._jdf.queryExecution().executedPlan().toString()
+
+    serve(rows[0])  # cold: loader validation and first plan of this shape
+    before = codegen.METRIC_COMPILATION_TIME().getCount()
+    for q in rows[1:]:
+        got, plan = serve(q)
+        assert len(got) == 10
+        assert "PartitionFilters" in plan and "list_bucket" in plan
+    assert codegen.METRIC_COMPILATION_TIME().getCount() == before
 
 
 def test_ann_route_malformed_and_overcap_are_400(server, ann_index, monkeypatch):
@@ -187,6 +266,17 @@ def test_ann_route_malformed_and_overcap_are_400(server, ann_index, monkeypatch)
     }
     status, env = _post(f"{base}/ann", json.dumps(ragged).encode())
     assert status == 400 and "ragged" in env["error"]
+    # nprobe below 1: 0 would probe no list (200 with no results), -3
+    # would silently probe NLIST - 3 lists
+    vec = list(emb.select("embedding").first().embedding)
+    for nprobe in (0, -3):
+        bad = {
+            "index_root": root,
+            "nprobe": nprobe,
+            "queries": [{"vec_id": 1, "embedding": vec}],
+        }
+        status, env = _post(f"{base}/ann", json.dumps(bad).encode())
+        assert status == 400 and "nprobe" in env["error"]
 
     # over-cap: 400 with the tiling hint, BEFORE any Spark work
     monkeypatch.setattr(sim, "_MAX_QUERY_ROWS", 2)
@@ -198,6 +288,42 @@ def test_ann_route_malformed_and_overcap_are_400(server, ann_index, monkeypatch)
     }
     status, env = _post(f"{base}/ann", json.dumps(over).encode())
     assert status == 400 and "tiled" in env["error"]
+
+
+def _ann_body(root: str, queries: list) -> bytes:
+    return json.dumps({"index_root": root, "k": 3, "queries": queries}).encode()
+
+
+def test_ann_route_non_finite_embedding_is_400(server, ann_index):
+    """NaN / Infinity components (json.loads takes the bare tokens,
+    float() the strings) are refused: they would reach the scorer and
+    put NaN scores — not valid JSON — into a 200 reply."""
+    base, _cfg = server
+    root, emb = ann_index
+    vec = list(emb.select("embedding").first().embedding)
+    for poison in (float("nan"), float("inf"), float("-inf"), "NaN", "Infinity"):
+        bad = [
+            {"vec_id": 1, "embedding": vec},
+            {"vec_id": 2, "embedding": vec[:-1] + [poison]},
+        ]
+        status, env = _post(f"{base}/ann", _ann_body(root, bad))
+        assert status == 400 and "non-finite" in env["error"], (poison, env)
+        assert "vec_id 2" in env["error"]
+
+
+def test_ann_route_zero_norm_embedding_is_400(server, ann_index):
+    """An all-zero embedding cannot be L2-normalized (every score would
+    be NaN): 400 naming the query, before any Spark work."""
+    base, _cfg = server
+    root, emb = ann_index
+    vec = list(emb.select("embedding").first().embedding)
+    bad = [
+        {"vec_id": 1, "embedding": vec},
+        {"vec_id": 7, "embedding": [0.0] * len(vec)},
+    ]
+    status, env = _post(f"{base}/ann", _ann_body(root, bad))
+    assert status == 400 and "zero" in env["error"]
+    assert "vec_id 7" in env["error"]
 
 
 def test_ann_route_refusal_is_500(server, tmp_path):
