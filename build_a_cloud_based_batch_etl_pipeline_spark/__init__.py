@@ -13,9 +13,9 @@ text analysis, multimodal columns) designed for 100 TB scale.
 
 Layout:
     session.py    SparkSession factory (AQE, UTC, Arrow, shuffle sizing)
-    schemas.py    explicit StructType schemas for every table
+    schemas.py    declared schemas: posts record shape, fixture-table registry
     config.py     env-var config surface (mirrors reference example.env)
-    sources/      parquet/json/csv/http readers with explicit schemas
+    sources/      parquet (memoized footer schema) / json / csv / http readers
     sinks.py      managed-table / object-store writers, idempotent append
     operators/    relational, window, asof, dedup, similarity, text, events
     functions/    scalar function helpers (string/date/math/cond/array/json)

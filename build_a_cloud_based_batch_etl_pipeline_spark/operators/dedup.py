@@ -1029,7 +1029,7 @@ def dedup_against_index(
     # partition with its live dir missing would silently shrink the
     # index for this query)
     from ..sinks import purge_recover
-    from .similarity import _table_fingerprint
+    from ..sources import _table_fingerprint
     from .util import memo_once
 
     purge_recover(spark, f"{index_root}/bands")
@@ -1096,9 +1096,8 @@ def dedup_incremental_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     rebuilds instead of serving stale signatures and a restarted
     session reuses the built index instead of rebuilding."""
     from .sampling import _TEST_LT, _split_bucket
-    from .similarity import _table_fingerprint
+    from ..sources import _table_fingerprint, table_path
     from .util import persisted_artifact
-    from ..sources import table_path
 
     docs = t(spark, sf_dir, "documents")
     is_new = _split_bucket() < _TEST_LT
@@ -1271,7 +1270,7 @@ def _edges_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges."""
     import os
 
-    from .similarity import _table_fingerprint
+    from ..sources import _table_fingerprint
     from .util import persisted_artifact
 
     fp = _table_fingerprint(os.path.join(sf_dir, "documents.parquet"), spark)

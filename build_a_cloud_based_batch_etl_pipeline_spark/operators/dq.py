@@ -850,8 +850,7 @@ def dq_referential_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # key carries the content fingerprint of every table build() reads,
     # so rewriting one in-session rebuilds the plan instead of serving
     # its stale file listing
-    from ..sources import table_path
-    from .similarity import _table_fingerprint
+    from ..sources import _table_fingerprint, table_path
     from .util import memo_once
 
     fps = tuple(

@@ -469,9 +469,8 @@ def multimodal_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     and images here — one commit discipline, three artifact kinds."""
 
     from .sampling import _TEST_LT, _split_bucket
-    from .similarity import _table_fingerprint
+    from ..sources import _table_fingerprint, table_path
     from .util import persisted_artifact
-    from ..sources import table_path
 
     docs = t(spark, sf_dir, "documents")
     is_new = _split_bucket() < _TEST_LT

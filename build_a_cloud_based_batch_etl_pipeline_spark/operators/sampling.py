@@ -714,9 +714,8 @@ def decontaminate_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     an index query can get; contrast dedup_incremental_index, whose
     MinHash estimate is rows-only by nature)."""
 
-    from .similarity import _table_fingerprint
+    from ..sources import _table_fingerprint, table_path
     from .util import persisted_artifact
-    from ..sources import table_path
 
     docs = spread_small_input(t(spark, sf_dir, "documents"), "doc_id")
     is_eval = _split_bucket() < _VALID_LT

@@ -26,7 +26,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..queries import query
-from ..sources import table_path
+from ..sources import _table_fingerprint, table_path
 from .util import (
     attach_sub,
     cache_once,
@@ -118,63 +118,6 @@ def _parquet_num_rows(path: str, spark: SparkSession | None = None) -> int | Non
         return None
     except Exception:
         return None
-
-
-def _table_fingerprint(path: str, spark: SparkSession | None = None) -> str:
-    """Cheap content fingerprint of a parquet table path: relative file
-    names + sizes + mtimes, hashed. O(files) driver-side listing —
-    the same walk the footer guard already does — so memoization keyed
-    on it cannot serve stale state after the table is rewritten or
-    regenerated within one Spark application (ADVICE r5). 'missing'
-    for a path with no parquet files.
-
-    Local paths keep the original os.walk listing (byte-identical
-    fingerprints to earlier rounds — persisted artifacts stay valid);
-    non-local paths fall back to the Hadoop FileSystem walk when
-    `spark` is given (r13: an object-store table previously
-    fingerprinted as 'missing' — EVERY such table collided on one
-    artifact directory, so a stale artifact could be served across
-    different corpora; now 'missing' means genuinely absent)."""
-    import hashlib
-    import os
-
-    entries: list[tuple[str, int, object]] = []
-    if os.path.isdir(path):
-        files = sorted(
-            os.path.join(root, f)
-            for root, _dirs, names in os.walk(path)
-            for f in names
-            if f.endswith(".parquet")
-        )
-        for f in files:
-            st = os.stat(f)
-            entries.append(
-                (os.path.relpath(f, path), st.st_size, st.st_mtime_ns)
-            )
-    elif os.path.isfile(path) and path.endswith(".parquet"):
-        st = os.stat(path)
-        # relpath(path, path) == "." — kept verbatim so single-file
-        # fingerprints stay byte-identical to earlier rounds (persisted
-        # artifacts keyed on them remain valid)
-        entries.append(
-            (os.path.relpath(path, path), st.st_size, st.st_mtime_ns)
-        )
-    elif spark is not None:
-        from ..fsio import Fs
-
-        fs = Fs(spark, path)
-        if fs.exists(path):
-            entries = [
-                (rel, sz, mt)
-                for rel, sz, mt in fs.walk_files(path)
-                if rel.endswith(".parquet")
-            ]
-    if not entries:
-        return "missing"
-    h = hashlib.sha256()
-    for rel, size, mtime in entries:
-        h.update(f"{rel}:{size}:{mtime}\n".encode())
-    return h.hexdigest()[:16]
 
 
 def dot(a: Column, b: Column) -> Column:

@@ -2203,7 +2203,7 @@ def _textrank_graph(spark: SparkSession, sf_dir: str):
     content word (including isolated ones, which hold base rank)."""
     import os
 
-    from .similarity import _table_fingerprint
+    from ..sources import _table_fingerprint
     from .util import persisted_artifact
 
     fp = _table_fingerprint(os.path.join(sf_dir, "documents.parquet"), spark)

@@ -330,7 +330,7 @@ def memo_once(spark: SparkSession, key: tuple, build):
     insert, `memo_once_clear()` as the one forget hook. Unlike
     cache_once entries (plan handles), these artifacts hold real driver
     memory, so the dict is additionally FIFO-bounded. Callers put a
-    content fingerprint in the key (similarity._table_fingerprint) so a
+    content fingerprint in the key (sources._table_fingerprint) so a
     rewritten source table misses instead of serving stale artifacts."""
     app = spark.sparkContext.applicationId
     for stale in [k for k in _MEMO_ONCE if k[0] != app]:

@@ -1,11 +1,17 @@
-"""Explicit schemas for every table the engine reads or writes.
+"""Declared schemas: the posts record shape and the fixture-table registry.
 
 Declared-schema discipline mirrors the reference's infrastructure-declared
 sink DDL (reference terraform/main.tf:68-94) while avoiding its
-schema-oblivious in-flight data (reference src/extract/main.py:28): every
-read in this engine passes an explicit StructType so malformed records
-surface deterministically instead of via per-row warehouse insert errors
+schema-oblivious in-flight data (reference src/extract/main.py:28): the
+JSON ingest path reads with ``POSTS_RAW`` so malformed records surface
+deterministically instead of via per-row warehouse insert errors
 (reference src/load/main.py:41-43).
+
+``TABLES`` is the registry of fixture-table names plus their declared
+shapes. It is not the read schema: ``sources.load_table`` reads each
+file's own footer schema (inferred once per file version and memoized),
+which matches ``TABLES`` except that the files' naive timestamps come
+back as ``timestamp_ntz`` where ``TABLES`` declares ``timestamp``.
 """
 
 from __future__ import annotations

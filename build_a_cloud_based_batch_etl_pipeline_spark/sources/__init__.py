@@ -1,7 +1,12 @@
 """Data sources: parquet/json/csv/text file readers and the HTTP-JSON source.
 
-Everything reads with an explicit schema (schemas.py) -- no inference in the
-engine path. ``load_table`` is the single entry point the query layer uses.
+``load_table`` is the single entry point the query layer uses for the
+fixture tables. Their schema is the parquet file's own, inferred from the
+footer once per file version and memoized (``read_parquet``); it is not
+``schemas.TABLES``, whose timestamp columns are declared ``timestamp``
+where the files hold ``timestamp_ntz``. JSON and CSV reads always pass an
+explicit schema, since those formats have nothing to infer from but a
+scan of the data.
 """
 
 from __future__ import annotations
@@ -10,14 +15,102 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..schemas import TABLES
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+# Session confs that change the schema Spark infers from a parquet footer.
+_PARQUET_INFER_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema",
+)
+
+# path -> (fingerprint, values of _PARQUET_INFER_CONFS, inferred schema).
+# One entry per path: a rewritten file replaces its old entry.
+_PARQUET_SCHEMAS: dict[str, tuple[str, tuple, T.StructType]] = {}
+
 
 def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
+
+
+def _table_fingerprint(path: str, spark: SparkSession | None = None) -> str:
+    """Cheap content fingerprint of a parquet table path: relative file
+    names + sizes + mtimes, hashed. O(files) driver-side listing, no
+    Spark job, so memoization keyed on it cannot serve stale state after
+    the table is rewritten or regenerated within one Spark application.
+    'missing' for a path with no parquet files.
+
+    Local paths use an os.walk listing (the fingerprints name persisted
+    artifact directories, so their bytes must not change); non-local
+    paths fall back to the Hadoop FileSystem walk when `spark` is given,
+    so distinct object-store tables never collide on 'missing'."""
+    import hashlib
+
+    entries: list[tuple[str, int, object]] = []
+    if os.path.isdir(path):
+        files = sorted(
+            os.path.join(root, f)
+            for root, _dirs, names in os.walk(path)
+            for f in names
+            if f.endswith(".parquet")
+        )
+        for f in files:
+            st = os.stat(f)
+            entries.append(
+                (os.path.relpath(f, path), st.st_size, st.st_mtime_ns)
+            )
+    elif os.path.isfile(path) and path.endswith(".parquet"):
+        st = os.stat(path)
+        # relpath(path, path) == "." — kept verbatim so single-file
+        # fingerprints stay byte-identical (persisted artifacts keyed on
+        # them remain valid)
+        entries.append(
+            (os.path.relpath(path, path), st.st_size, st.st_mtime_ns)
+        )
+    elif spark is not None:
+        from ..fsio import Fs
+
+        fs = Fs(spark, path)
+        if fs.exists(path):
+            entries = [
+                (rel, sz, mt)
+                for rel, sz, mt in fs.walk_files(path)
+                if rel.endswith(".parquet")
+            ]
+    if not entries:
+        return "missing"
+    h = hashlib.sha256()
+    for rel, size, mtime in entries:
+        h.update(f"{rel}:{size}:{mtime}\n".encode())
+    return h.hexdigest()[:16]
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """Parquet scan whose footer schema is inferred once per file version.
+
+    A plain ``spark.read.parquet`` runs a one-task Spark job to read the
+    footer on every call. The inferred schema is memoized on the path's
+    content fingerprint plus the session confs that change inference, and
+    a hit passes it to the reader, which then runs no job. The DataFrame
+    itself is always new: a self-join needs fresh attribute ids.
+    """
+    fp = _table_fingerprint(path, spark)
+    if fp == "missing":
+        # nothing to key a memo on; Spark raises if the path is absent
+        return spark.read.parquet(path)
+    confs = tuple(spark.conf.get(k) for k in _PARQUET_INFER_CONFS)
+    hit = _PARQUET_SCHEMAS.get(path)
+    if hit is not None and hit[0] == fp and hit[1] == confs:
+        return spark.read.schema(hit[2]).parquet(path)
+    df = spark.read.parquet(path)
+    _PARQUET_SCHEMAS[path] = (fp, confs, df.schema)
+    return df
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -31,7 +124,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         raise KeyError(f"unknown table {name!r}; known: {sorted(TABLES)}")
     if name == "events":
         return _load_events(spark, sf_dir)
-    return spark.read.parquet(table_path(sf_dir, name))
+    return read_parquet(spark, table_path(sf_dir, name))
 
 
 def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -49,11 +142,8 @@ def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
       TimestampType — with the session timezone pinned to UTC the wall
       time is preserved exactly, matching DuckDB's naive read.
     """
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(table_path(sf_dir, "events"))
+    df = read_parquet(spark, table_path(sf_dir, "events"))
     ts_type = df.schema["ts"].dataType
     if isinstance(ts_type, T.LongType):
         return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))

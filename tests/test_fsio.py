@@ -111,6 +111,8 @@ def test_fingerprint_and_footer_guard_over_file_uri(spark, tmp_path):
     content-addressed artifact could be served stale."""
     from build_a_cloud_based_batch_etl_pipeline_spark.operators.similarity import (
         _parquet_num_rows,
+    )
+    from build_a_cloud_based_batch_etl_pipeline_spark.sources import (
         _table_fingerprint,
     )
 

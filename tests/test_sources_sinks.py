@@ -240,6 +240,147 @@ def test_load_events_normalizes_all_ts_physical_types(spark, tmp_path):
     assert out.collect()[0].ts == expect
 
 
+def _jobs_run_by(spark, group, fn):
+    """Call fn() with every Spark job it starts tagged `group`; return
+    (fn's result, number of those jobs)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_load_table_schema_matches_declared_tables(spark, sf_dir):
+    """Fixture tables are read with the parquet file's own schema, not
+    schemas.TABLES. The two agree except that the files store naive
+    timestamps (timestamp_ntz) where TABLES declares timestamp; this
+    pins any further drift between the files and the declared shapes."""
+    from pyspark.sql import types as T
+
+    from build_a_cloud_based_batch_etl_pipeline_spark.schemas import TABLES
+
+    def ntz_as_ltz(schema):
+        return T.StructType([
+            T.StructField(
+                f.name,
+                T.TimestampType()
+                if isinstance(f.dataType, T.TimestampNTZType)
+                else f.dataType,
+                f.nullable,
+            )
+            for f in schema.fields
+        ])
+
+    for name, declared in TABLES.items():
+        got = load_table(spark, sf_dir, name).schema
+        assert ntz_as_ltz(got) == declared, name
+
+
+def test_warm_load_table_runs_no_spark_job(spark, sf_dir):
+    """Without a schema, spark.read.parquet runs a one-task job to read
+    the footer. A warm load_table reuses the memoized schema: no job."""
+    from build_a_cloud_based_batch_etl_pipeline_spark.schemas import TABLES
+
+    # events first: its loader sets the nanos conf, which is part of the
+    # memo key, so tables read before it would miss once more
+    for name in ("events", *TABLES):
+        load_table(spark, sf_dir, name)
+    for name in TABLES:
+        df, jobs = _jobs_run_by(
+            spark, f"warm_load_{name}", lambda: load_table(spark, sf_dir, name)
+        )
+        assert jobs == 0, (name, jobs)
+        assert df.count() > 0
+
+
+def test_read_parquet_sees_rewritten_file(spark, tmp_path):
+    """The schema memo is keyed on the file's content fingerprint: a
+    rewrite that adds a column shows the column on the next read."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d = tmp_path / "rewrite"
+    d.mkdir()
+    path = str(d / "region.parquet")
+    pq.write_table(
+        pa.table({"r_regionkey": pa.array([0], pa.int32()), "r_name": ["A"]}),
+        path,
+    )
+    assert load_table(spark, str(d), "region").columns == ["r_regionkey", "r_name"]
+    assert load_table(spark, str(d), "region").columns == ["r_regionkey", "r_name"]
+    pq.write_table(
+        pa.table({
+            "r_regionkey": pa.array([0], pa.int32()),
+            "r_name": ["A"],
+            "r_comment": ["new"],
+        }),
+        path,
+    )
+    df = load_table(spark, str(d), "region")
+    assert df.columns == ["r_regionkey", "r_name", "r_comment"]
+    assert df.collect()[0].r_comment == "new"
+
+
+def test_read_parquet_schema_follows_inference_confs(spark, tmp_path):
+    """The schema memo is keyed on the session confs that change
+    inference: the same file reads as string under binaryAsString and
+    as binary without it."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from pyspark.sql import types as T
+
+    from build_a_cloud_based_batch_etl_pipeline_spark.sources import read_parquet
+
+    path = str(tmp_path / "bin.parquet")
+    pq.write_table(pa.table({"b": pa.array([b"xy"], pa.binary())}), path)
+    key = "spark.sql.parquet.binaryAsString"
+    before = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "true")
+        as_string = read_parquet(spark, path)
+        assert isinstance(as_string.schema["b"].dataType, T.StringType)
+        assert as_string.collect()[0].b == "xy"
+        spark.conf.set(key, "false")
+        as_binary = read_parquet(spark, path)
+        assert isinstance(as_binary.schema["b"].dataType, T.BinaryType)
+        assert bytes(as_binary.collect()[0].b) == b"xy"
+    finally:
+        spark.conf.set(key, before)
+
+
+def test_load_table_returns_fresh_dataframe_for_self_join(spark, sf_dir):
+    """Only the schema is memoized, never the DataFrame: two loads of
+    one table carry distinct attribute ids, so a self-join resolves."""
+    from build_a_cloud_based_batch_etl_pipeline_spark.operators.util import t
+
+    n1 = t(spark, sf_dir, "nation")
+    n2 = t(spark, sf_dir, "nation")
+    pairs = n1.join(n2, n1["n_regionkey"] == n2["n_nationkey"]).select(
+        n1["n_nationkey"].alias("nation"),
+        n1["n_regionkey"].alias("region"),
+        n2["n_nationkey"].alias("other"),
+    )
+    rows = pairs.collect()
+    assert len(rows) == n1.count() > 0
+    assert all(r.region == r.other for r in rows)
+
+
+def test_warm_q5_plan_build_runs_no_spark_job(spark, sf_dir):
+    """Building a query's plan reads five fixture tables; warm, that
+    costs no Spark job (it cost one footer-read job per table)."""
+    from build_a_cloud_based_batch_etl_pipeline_spark.queries import load_all
+
+    fn = load_all()["q5_region_revenue"].fn
+    fn(spark, sf_dir)
+    df, jobs = _jobs_run_by(spark, "warm_q5_build", lambda: fn(spark, sf_dir))
+    assert jobs == 0, jobs
+    assert df.count() > 0
+
+
 def test_swap_dir_crash_states_are_recoverable(spark, tmp_path):
     """swap_dir parks the live dir at `.old` before renaming staging in,
     so no crash point loses data: the mid-swap state (live missing,

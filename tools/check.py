@@ -24,7 +24,8 @@ import pandas as pd
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
+# one DuckDB view per engine table, named as in the engine's registry
+from build_a_cloud_based_batch_etl_pipeline_spark.schemas import TABLES  # noqa: E402
 
 
 def duck_con(sf_dir: str) -> duckdb.DuckDBPyConnection:

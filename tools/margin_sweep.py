@@ -62,7 +62,8 @@ import duckdb
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
+# one DuckDB view per engine table, named as in the engine's registry
+from build_a_cloud_based_batch_etl_pipeline_spark.schemas import TABLES  # noqa: E402
 
 FAIL_MARGIN = 1e-6
 _MASK = "R0UND1ARG_"
